@@ -265,11 +265,15 @@ final class Run(val spark: SparkSession, a: Map[String, String]) {
     if (ok) s else Double.NaN
   }
 
+  /** Untimed passes before a replay is measured. Pass times keep falling
+    * (JIT) for about six full passes; measured on that slope, a run's median
+    * depended on how far down it had got. */
+  val WarmPasses = 6
+
   def replay(): Unit = {
     val file = s"$data/ticks.txt"
     val dest = s"$out/replay"
-    // JIT warm-up: pass times keep falling for several full passes.
-    for (_ <- 1 to 3) replayPass(file, dest)
+    for (_ <- 1 to WarmPasses) replayPass(file, dest)
     attempted = 0; failed = 0 // the warm passes are set-up, not measured work
     setupDone()
     val walls = loop(replayPass(file, dest)).filterNot(_.isNaN)
@@ -343,12 +347,17 @@ final class Run(val spark: SparkSession, a: Map[String, String]) {
     def leadDoneNs: Long = ticks.indices.filter(i => f.sendUs(i) < f.leadUs).map(deliveredAt(_)).max
     def ticksPerS: Double =
       measured.length / ((measured.map(deliveredAt(_)).max - t0 - f.leadUs * 1000) / 1e9)
-    def batches: Seq[StreamingQueryProgress] = progress.filter(p => p.numInputRows > 0 &&
-      Instant.parse(p.timestamp).toEpochMilli >= t0WallMs + f.leadUs / 1000)
+    /** Batches that started while the measured part of the schedule ran. */
+    def batches: Seq[StreamingQueryProgress] = progress.filter { p =>
+      val at = Instant.parse(p.timestamp).toEpochMilli - t0WallMs
+      p.numInputRows > 0 && at >= f.leadUs / 1000 && at < f.sendUs.last / 1000
+    }
   }
 
   /** Micro-batch cadence of the stream workload (FlowControlConfig.delayMs). */
   val CadenceMs = 1000L
+  /** Send slot of the stream generator. */
+  val SlotMs = 50L
 
   /** Feed `f` through hotLoopStream -> broadcastTo on its schedule. A
     * generator thread adds ticks when they are due and never waits for
@@ -378,10 +387,11 @@ final class Run(val spark: SparkSession, a: Map[String, String]) {
     val (input, query, registry) =
       fanOut(tag, n, TickStream.triggerFor(FlowControlConfig(delayMs = CadenceMs)))
     // Micro-batches start on multiples of the cadence (wall clock). The
-    // schedule starts half a cadence after a start, so every run sends its
-    // bursts at the same phase of the batch clock.
+    // schedule starts half a cadence (plus half a send slot) after a start,
+    // so every run sends its bursts at the same phase of the batch clock and
+    // no send slot races a batch start.
     val now = System.currentTimeMillis()
-    val t0WallMs = (now / CadenceMs + 1) * CadenceMs + CadenceMs / 2
+    val t0WallMs = (now / CadenceMs + 1) * CadenceMs + CadenceMs / 2 + SlotMs / 2
     val t0 = System.nanoTime() + (t0WallMs - now) * 1000000
     val ticks = Array.tabulate(n)(i =>
       TickIn(i + 1L, t0 + f.sendUs(i) * 1000, f.price(i), f.delta(i)))
@@ -389,7 +399,7 @@ final class Run(val spark: SparkSession, a: Map[String, String]) {
     // addData call into one input partition, so per-tick sends would make
     // thousands of tasks per micro-batch. A tick's latency still counts
     // from its own scheduled time.
-    val slotNs = 50L * 1000000
+    val slotNs = SlotMs * 1000000
     val late = ArrayBuffer[Double]()
     val gen = new Thread(() => {
       var i = 0
@@ -417,21 +427,8 @@ final class Run(val spark: SparkSession, a: Map[String, String]) {
     StreamRun(f, t0, t0WallMs, ticks, StreamSink.deliveredAt, late.toSeq, progress, registry)
   }
 
-  /** Warm the stream path: its planning and commit code runs once per
-    * micro-batch, so the warm-up is counted in batches, not ticks. */
-  def warmStream(f: Feed, batches: Int): Unit = {
-    val (input, query, _) = fanOut("warm", f.sendUs.length, Trigger.ProcessingTime(0))
-    val ticks = f.sendUs.indices.map(i => TickIn(i + 1L, System.nanoTime(), f.price(i), f.delta(i)))
-    ticks.grouped(math.max(1, ticks.length / batches)).foreach { chunk =>
-      input.addData(chunk)
-      query.processAllAvailable()
-    }
-    query.stop()
-  }
-
   def stream(): Unit = {
     val feed = readFeed(s"$data/stream.txt")
-    warmStream(readFeed(s"$data/stream_warm.txt"), 12)
     val beforeRun = (System.currentTimeMillis() - startMs) / 1000.0
     val runStart = System.nanoTime()
     attempted += feed.sendUs.length
@@ -508,7 +505,7 @@ final class Ladder(r: Run) {
   def all(): Unit = {
     val full = s"${r.data}/ticks.txt"
     val dest = s"${r.out}/replay"
-    for (_ <- 1 to 3) r.replayPass(full, dest)
+    for (_ <- 1 to r.WarmPasses) r.replayPass(full, dest)
     r.setupDone()
     // One traced pass between two untraced ones: pass times still fall as
     // the JIT warms, and the mean of the neighbours cancels that trend.
@@ -606,7 +603,6 @@ final class Ladder(r: Run) {
 
   private def streamLayers(): Unit = {
     val f = r.readFeed(s"${r.data}/stream.txt")
-    r.warmStream(r.readFeed(s"${r.data}/stream_warm.txt"), 12)
     r.drain()
     val jobs0 = r.collector.all.jobs
     val run = r.span("stream")(r.streamRun(f, "ladder"))

@@ -38,9 +38,10 @@ TICK_QUERIES = ["t01_tick_parse", "t02_volume_expansion", "t03_hotloop_derivativ
                 "t07_bars_boxcar", "t08_bars_fir", "t09_tick_capture", "t10_bar_capture"]
 
 SCALES = {  # replay lines, warehouse scale factor, stream rate/lead-in/burst/burst period
-    "default": {"lines": 100_000, "sf": 0.005, "rate": 10_000, "lead": 2.0,
+    "default": {"lines": 100_000, "sf": 0.005, "rate": 10_000, "lead": 24.0,
                 "burst": 10_000, "every": 4.0},
-    "tiny": {"lines": 3_000, "sf": 0.001, "rate": 2_000, "lead": 1.0,
+    # the lead-in outlasts the stream query's cold first batch (about 5 s)
+    "tiny": {"lines": 3_000, "sf": 0.001, "rate": 2_000, "lead": 6.0,
              "burst": 2_000, "every": 1.0},
 }
 
@@ -142,8 +143,6 @@ def make_inputs(work, workload, seed, seconds, trace, scale):
     if trace or workload == "stream":
         gen.stream_ticks(os.path.join(work, "stream.txt"), seed, s["rate"], s["lead"], seconds,
                          s["burst"], s["every"])
-        gen.stream_ticks(os.path.join(work, "stream_warm.txt"), seed + 1, s["rate"], 0.0,
-                         2.0, s["burst"], 2.0)
     return facts
 
 
